@@ -2,8 +2,16 @@
 
 Same contract as the reference: given two records and a matcher,
 produce (saliency, probabilities-of-sufficiency, counterfactuals,
-triangles). Pandas objects at the API edge for drop-in familiarity;
-every stage underneath is a Spark plan (SURVEY.md §3.1).
+triangles). Pandas objects at the API edge for drop-in familiarity.
+
+The candidate scan that finds the support pairs is the one stage that
+touches data at scale, and it runs as one fused Spark pass per call
+(operators/support.py). Its output — at most ``num_triangles``+1 pairs
+per explained instance — is collected once, and the rest (triangles,
+perturbations, flip counting, saliency, PSS, counterfactuals) is one
+driver-side post-scan over a list of instances
+(operators/triangles.py). Only the perturbation scoring goes back to
+Spark, through the matcher's own ``predict``.
 """
 
 from __future__ import annotations
@@ -14,12 +22,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from certa_spark import tmpcache
 from certa_spark.matching import Matcher, NativeCosineMatcher
 from certa_spark.operators import triangles as T
 from certa_spark.operators.augment import generate_modified
-from certa_spark.operators.pairs import composite_id, pair_row
-from certa_spark.operators.support import support_predictions
+from certa_spark.operators.pairs import pair_row
+from certa_spark.operators.support import (
+    support_predictions,
+    support_predictions_batch,
+)
 from certa_spark.schema import LPREFIX, RPREFIX
 
 
@@ -33,10 +43,7 @@ class Explanation:
     triangles: list[tuple[str, str, str]]
     cf_summary: pd.Series = field(default_factory=pd.Series)
     lattices: list = field(default_factory=list)
-    # Spark-side handles for further composition
     saliency_dict: dict[str, float] = field(default_factory=dict)
-    counterfactuals_df: DataFrame | None = None
-    pss_df: DataFrame | None = None
 
 
 class CertaExplainer:
@@ -88,62 +95,27 @@ class CertaExplainer:
         max_predict: int = -1,
         debug: bool = False,
     ) -> Explanation:
-        # every short-lived cache below registers with this scope and
-        # is unpersisted when the explanation (pure driver-side data)
-        # is returned — see tmpcache.py for why leaking them degrades
-        # long sessions
-        with tmpcache.scope():
-            return self._explain_scoped(
-                l_tuple, r_tuple, matcher, left, right, attr_length,
-                num_triangles, lprefix, rprefix, max_predict, debug,
-            )
-
-    def _explain_scoped(
-        self, l_tuple, r_tuple, matcher, left, right, attr_length,
-        num_triangles, lprefix, rprefix, max_predict, debug,
-    ) -> Explanation:
-        spark = self.spark
         if matcher is None:
             matcher = NativeCosineMatcher(lprefix, rprefix)
 
         # 1. original prediction (explain.py:54-55)
-        r1r2 = pair_row(spark, l_tuple, r_tuple, lprefix, rprefix)
+        r1r2 = pair_row(self.spark, l_tuple, r_tuple, lprefix, rprefix)
         scores = matcher.predict(r1r2).select("nomatch_score", "match_score").collect()[0]
         pc = 1 if scores["match_score"] > scores["nomatch_score"] else 0
 
-        # 2. support search (explain.py:56-62)
-        support_pairs, copies_left, copies_right = support_predictions(
-            spark, l_tuple, r_tuple, self.lsource, self.rsource, matcher,
+        # 2. support search (explain.py:56-62), collected
+        support = support_predictions(
+            self.spark, l_tuple, r_tuple, self.lsource, self.rsource, matcher,
             class_to_explain=pc, num_triangles=num_triangles,
             lprefix=lprefix, rprefix=rprefix, use_w=left, use_q=right,
             max_predict=max_predict, use_all=self.use_all, seed=self.seed,
         )
-        # Tiny frames: plain cache() is enough here because lineage is
-        # already truncated at the scan output (scan_candidates_dual
-        # localCheckpoints its prediction frame) — without that leaf,
-        # per-action Catalyst re-analysis of the accumulated plan
-        # dominated wall-clock (28s of a 42s explain). Each extra
-        # localCheckpoint costs one materialization job (~0.3s), so only
-        # the cuts below the big scans keep one.
-        support_pairs = tmpcache.track(support_pairs.repartition(1).cache())
-        # Everything after the (checkpointed) scans runs on frames of
-        # <= 3*num_triangles rows, where AQE only multiplies jobs: each
-        # tiny exchange materializes as its own adaptive stage-job
-        # (~0.1s scheduler latency each — job tracing showed 12+ jobs
-        # for ONE triangle collect). Turn it off for the micro-query
-        # phase and restore on exit; the big candidate scans above keep
-        # it (skew/coalesce matter there).
         if attr_length <= 0:
             attr_length = min(len(l_tuple) - 1, len(r_tuple) - 1)
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            return self._explain_post_scan(
-                spark, support_pairs, copies_left, copies_right, scores,
-                pc, attr_length, matcher, lprefix, rprefix, debug,
-            )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+        return self._post_scan(
+            [support], [pc], [float(scores["match_score"])], matcher,
+            attr_length, lprefix, rprefix, debug,
+        )[0]
 
     def explain_batch(
         self,
@@ -154,40 +126,32 @@ class CertaExplainer:
         lprefix: str = LPREFIX,
         rprefix: str = RPREFIX,
         max_predict: int = -1,
-        parallelism: int = 4,
         scan_batch_size: int = 8,
     ) -> list[Explanation]:
         """Set-oriented multi-pair explain — the shape the reference's
         per-instance Python loop cannot express: ONE model round scores
-        every instance's original pair, and ONE fused corpus scan +
-        model round (operators/support.support_predictions_batch)
-        covers every instance's candidate search. Only the tiny
-        post-scan micro-phases (≤ 3·num_triangles-row frames) run per
-        instance, in threads over the shared checkpointed scan output
-        with AQE gated off once for the whole phase.
+        every instance's original pair, ONE fused corpus scan + model
+        round (operators/support.support_predictions_batch) covers
+        every instance's candidate search, and ONE post-scan explains
+        them all (a single perturbation scoring round for a ``cheap``
+        matcher).
 
         ``explain_batch([x]) == [explain(x)]`` by construction (same
         seeds, same per-tag stop rules) — parity-tested. Instances
-        whose support falls short (DA fallback) transparently take the
-        single-instance path.
+        whose support falls short (DA fallback) get their support from
+        the single-instance scan.
 
         ``scan_batch_size`` chunks very large batches: each chunk is
-        one fused scan. Catalyst analysis of the k-way union grows
-        superlinearly with k (measured: batch-16 in one plan is slower
-        than two batch-8 plans), so the default keeps each plan in the
-        regime where the fused scan wins.
+        one fused scan, and two chunks run at a time (one chunk's scan
+        overlaps the other's post-scan). Catalyst analysis of the k-way
+        union grows superlinearly with k, so the default keeps each
+        plan in the regime where the fused scan wins.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
-        from certa_spark.operators.support import support_predictions_batch
-
-        spark = self.spark
         if matcher is None:
             matcher = NativeCosineMatcher(lprefix, rprefix)
         if len(instances) > scan_batch_size:
-            # overlap chunk pipelines (chunk n+1's scan runs while
-            # chunk n's post-scan micro-phases drain); AQE toggling
-            # across threads is a perf knob only, same as eval.evaluate
+            from concurrent.futures import ThreadPoolExecutor
+
             chunks = [
                 instances[at : at + scan_batch_size]
                 for at in range(0, len(instances), scan_batch_size)
@@ -197,8 +161,7 @@ class CertaExplainer:
                     cpool.map(
                         lambda ch: self.explain_batch(
                             ch, matcher, num_triangles, attr_length,
-                            lprefix, rprefix, max_predict, parallelism,
-                            scan_batch_size,
+                            lprefix, rprefix, max_predict, scan_batch_size,
                         ),
                         chunks,
                     )
@@ -208,7 +171,7 @@ class CertaExplainer:
         # 1. original predictions, one model round for all instances
         heads = None
         for i, (l_t, r_t) in enumerate(instances):
-            h = pair_row(spark, l_t, r_t, lprefix, rprefix).withColumn(
+            h = pair_row(self.spark, l_t, r_t, lprefix, rprefix).withColumn(
                 "_i", F.lit(i)
             )
             heads = h if heads is None else heads.unionByName(h)
@@ -218,307 +181,99 @@ class CertaExplainer:
             .select("_i", "nomatch_score", "match_score")
             .collect()
         }
+        match_scores = [float(score_rows[i]["match_score"]) for i in range(len(instances))]
         pcs = [
-            1
-            if score_rows[i]["match_score"] > score_rows[i]["nomatch_score"]
-            else 0
+            1 if score_rows[i]["match_score"] > score_rows[i]["nomatch_score"] else 0
             for i in range(len(instances))
         ]
 
         # 2. fused support scan for all instances
-        all_support, n_support = support_predictions_batch(
-            spark, instances, self.lsource, self.rsource, matcher, pcs,
+        supports = support_predictions_batch(
+            instances, self.lsource, self.rsource, matcher, pcs,
             num_triangles, lprefix, rprefix, max_predict, self.seed,
         )
-        all_support = all_support.repartition(2).localCheckpoint()
+        for i, support in enumerate(supports):
+            if support is None:
+                supports[i] = support_predictions(
+                    self.spark, *instances[i], self.lsource, self.rsource,
+                    matcher, pcs[i], num_triangles, lprefix, rprefix,
+                    max_predict=max_predict, use_all=self.use_all, seed=self.seed,
+                )
 
         if attr_length <= 0:
             attr_length = min(
                 len(instances[0][0]) - 1, len(instances[0][1]) - 1
             )
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-
-            def one(i: int) -> Explanation:
-                # per-thread scope: each worker owns exactly the caches
-                # its post-scan micro-phases create
-                with tmpcache.scope():
-                    return _one_scoped(i)
-
-            def _one_scoped(i: int) -> Explanation:
-                if n_support[i] < num_triangles:
-                    # DA fallback needs the augmentation rescan — the
-                    # single-instance path owns that machinery
-                    return self.explain(
-                        instances[i][0], instances[i][1], matcher,
-                        attr_length=attr_length,
-                        num_triangles=num_triangles,
-                        lprefix=lprefix, rprefix=rprefix,
-                        max_predict=max_predict,
-                    )
-                support_i = tmpcache.track(
-                    all_support.filter(F.col("_probe") == i)
-                    .drop("_probe")
-                    .repartition(1)
-                    .cache()
-                )
-                return self._explain_post_scan(
-                    spark, support_i, None, None, score_rows[i],
-                    pcs[i], attr_length, matcher, lprefix, rprefix, False,
-                )
-
-            # Cross-instance fused post-scan (round-8 perf work): a
-            # cheap (JVM-side) matcher already predicts all depths in
-            # one round per instance, but the 16 per-instance pipelines
-            # still issue ~8 tiny actions EACH, all serializing through
-            # the single-threaded DAGScheduler (measured: ~60s of
-            # thread-time for 16 post-scans vs ~9s of scans). The fused
-            # path tags every frame with _probe and runs ONE plan per
-            # phase for the whole chunk — identical outputs per
-            # instance (parity-tested). DA-fallback instances keep the
-            # per-instance path, as does a real (non-cheap) model where
-            # per-depth early exit saves actual inference.
-            fused_idx = [
-                i for i in range(len(instances))
-                if n_support[i] >= num_triangles
-            ]
-            if (
-                getattr(matcher, "cheap", False)
-                and attr_length > 1
-                and fused_idx
-            ):
-                with tmpcache.scope():
-                    results = self._explain_post_scan_fused_batch(
-                        spark, all_support, fused_idx, score_rows,
-                        pcs, attr_length, matcher, lprefix, rprefix,
-                    )
-                rest = [
-                    i for i in range(len(instances)) if i not in results
-                ]
-                if rest:
-                    with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                        for i, e in zip(rest, pool.map(one, rest)):
-                            results[i] = e
-                return [results[i] for i in range(len(instances))]
-
-            with ThreadPoolExecutor(max_workers=parallelism) as pool:
-                return list(pool.map(one, range(len(instances))))
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-
-    def _explain_post_scan_fused_batch(
-        self, spark, all_support, idx, score_rows, pcs, attr_length,
-        matcher, lprefix, rprefix,
-    ) -> dict[int, Explanation]:
-        """Post-scan micro-phases for a whole chunk in ONE plan per
-        phase (triangles, resolution, perturb+predict, rankings,
-        summaries) — every frame probe-tagged, ~8 driver actions total
-        instead of ~8 per instance. Per-instance outputs are identical
-        to :meth:`_explain_post_scan` (parity-tested); the per-instance
-        Spark handles (``pss_df``/``counterfactuals_df``) are lazy
-        probe filters over the shared frames."""
-        supp = all_support.filter(F.col("_probe").isin(idx))
-        tri_all = tmpcache.track(
-            T.mixed_triangles(supp, probe_col="_probe")
-            .repartition(2)
-            .cache()
+        return self._post_scan(
+            supports, pcs, match_scores, matcher, attr_length, lprefix,
+            rprefix, False,
         )
-        tri_rows_all = tri_all.collect()
-        tri_by_probe: dict[int, list] = {}
-        for r in tri_rows_all:
-            tri_by_probe.setdefault(r["_probe"], []).append(r)
 
-        results: dict[int, Explanation] = {}
-        for i in idx:
-            if not tri_by_probe.get(i):
-                results[i] = Explanation(
-                    pd.DataFrame(), pd.Series(dtype=float),
-                    pd.DataFrame(), [],
-                )
-        live = [i for i in idx if i in tri_by_probe]
-        if not live:
-            return results
+    def _post_scan(
+        self,
+        supports: list[pd.DataFrame],
+        pcs: list[int],
+        match_scores: list[float],
+        matcher: Matcher,
+        attr_length: int,
+        lprefix: str,
+        rprefix: str,
+        debug: bool,
+    ) -> list[Explanation]:
+        """Triangles, perturbations, scoring, rankings and summaries for
+        every instance's collected support (explain.py:63-158)."""
+        l_attrs = [c for c in self.lsource.columns if c != "id"]
+        r_attrs = [c for c in self.rsource.columns if c != "id"]
+        attributes = [lprefix + c for c in l_attrs] + [rprefix + c for c in r_attrs]
 
-        n_tri_by_probe = {i: len(tri_by_probe[i]) for i in live}
-        pcs_by_probe = {i: pcs[i] for i in live}
-        resolved = {
-            side: df.repartition(2).localCheckpoint()
-            for side, df in T.resolve_triangle_records(
-                tri_all, self.lsource, self.rsource, lprefix, rprefix
-            ).items()
-        }
-        flipped, rankings, n_flipped_by_probe = (
-            T.perturb_predict_fused_batch(
-                resolved, self.lsource, self.rsource, matcher,
-                pcs_by_probe, attr_length, lprefix, rprefix,
-            )
-        )
-        flipped = tmpcache.track(flipped.repartition(2).cache())
-        rankings = tmpcache.track(rankings.repartition(2).cache())
-        explanation = tmpcache.track(
-            T.aggregate_rankings_batch(
-                rankings, n_tri_by_probe, attr_length
-            )
-            .repartition(2)
-            .cache()
-        )
-        attributes = [
-            lprefix + c for c in self.lsource.columns if c != "id"
-        ] + [rprefix + c for c in self.rsource.columns if c != "id"]
-        sal_by_probe = T.saliency_batch(
-            rankings, attributes, n_tri_by_probe, n_flipped_by_probe
-        )
-        summary = tmpcache.track(
-            T.cf_summary_batch(explanation).repartition(2).cache()
-        )
-        cfs = T.counterfactuals_batch(flipped, summary)
-
-        pss_all = explanation.select("_probe", "attr_set", "pss").toPandas()
-        summary_all = summary.select("_probe", "attr_set", "pss").toPandas()
-        cf_all = (
-            cfs.withColumn(
-                "alteredAttributes", F.array_join("alteredAttributes", "/")
-            )
-            .withColumn("droppedValues", F.array_join("droppedValues", "/"))
-            .withColumn("copiedValues", F.array_join("copiedValues", "/"))
-            .drop("_pc")
-            .toPandas()
-        )
-        for i in live:
-            pss_pdf = pss_all[pss_all["_probe"] == i]
-            summary_pdf = summary_all[summary_all["_probe"] == i]
-            cf_pdf = (
-                cf_all[cf_all["_probe"] == i]
-                .drop(columns=["_probe"])
-                .sort_values("attr_count", kind="stable")
-                .reset_index(drop=True)
-            )
-            sal = sal_by_probe[i]
-            results[i] = Explanation(
-                saliency=pd.DataFrame([sal]),
-                pss=pd.Series(
-                    data=pss_pdf["pss"].values,
-                    index=pss_pdf["attr_set"].values,
-                ),
-                counterfactuals=cf_pdf,
-                triangles=[
-                    (r["pivot"], r["anchor"], r["free"])
-                    for r in tri_by_probe[i]
-                ],
-                cf_summary=pd.Series(
-                    data=summary_pdf["pss"].values,
-                    index=summary_pdf["attr_set"].values,
-                ),
-                lattices=[],
-                saliency_dict=sal,
-                counterfactuals_df=cfs.filter(F.col("_probe") == i)
-                .drop("_probe", "_pc")
-                .orderBy("attr_count"),
-                pss_df=explanation.filter(F.col("_probe") == i).drop(
-                    "_probe"
-                ),
-            )
-        return results
-
-    def _explain_post_scan(
-        self, spark, support_pairs, copies_left, copies_right, scores,
-        pc, attr_length, matcher, lprefix, rprefix, debug,
-    ) -> Explanation:
-        # no support_pairs.count()==0 early exit: empty support implies
-        # empty triangles, and the tri_rows check below returns the same
-        # empty Explanation — counting here would only add an action
-        # (support derives from a checkpointed leaf, so letting the
-        # triangle plan materialize the cache costs no recompute)
-
-        # 3. extended sources (explain.py:67): DA copies of r2 extend the
-        # left source, copies of r1 extend the right source.
-        ext_l, ext_r = self.lsource, self.rsource
-        if copies_right is not None:
-            ext_l = tmpcache.track(
-                ext_l.unionByName(copies_right.select(*ext_l.columns)).cache()
-            )
-        if copies_left is not None:
-            ext_r = tmpcache.track(
-                ext_r.unionByName(copies_left.select(*ext_r.columns)).cache()
-            )
-
-        # 4. triangle enumeration (triangles_method.py:25-53)
-        tri = tmpcache.track(T.mixed_triangles(support_pairs).repartition(1).cache())
-        tri_rows = tri.collect()
-        n_triangles = len(tri_rows)
-        if n_triangles == 0:
-            return Explanation(pd.DataFrame(), pd.Series(dtype=float), pd.DataFrame(), [])
-
-        # 5. depth loop + aggregations
-        flipped, rankings, all_pred = T.perturb_predict(
-            spark, tri, ext_l, ext_r, matcher, pc, attr_length, lprefix, rprefix
-        )
-        pre_nf = getattr(flipped, "_precomputed_n_flipped", None)
-        ranking_rows = getattr(rankings, "_precomputed_ranking_rows", None)
-        flipped = tmpcache.track(flipped.repartition(2).cache())
-        rankings = tmpcache.track(rankings.repartition(1).cache())
-        n_flipped = pre_nf if pre_nf is not None else flipped.count()
-
-        explanation = tmpcache.track(T.aggregate_rankings(rankings, n_triangles, attr_length).repartition(1).cache())
-        attributes = [lprefix + c for c in self.lsource.columns if c != "id"] + [
-            rprefix + c for c in self.rsource.columns if c != "id"
+        # 3. triangle enumeration (triangles_method.py:25-53)
+        tris = [
+            T.open_triangles(s) if len(s) else pd.DataFrame() for s in supports
         ]
-        # the fused perturb path already collected the per-set flip
-        # counts — fold saliency driver-side instead of re-collecting
-        sal = (
-            T.saliency_from_counts(
-                ranking_rows, attributes, n_triangles, n_flipped
+        live = [i for i, t in enumerate(tris) if len(t)]
+        # 4. perturbations of every depth, scored with the per-depth
+        # early exit (triangles_method.py:266-334)
+        perts = [
+            T.perturbations(
+                supports[i], tris[i], l_attrs, r_attrs, pcs[i], attr_length,
+                lprefix, rprefix,
             )
-            if ranking_rows is not None
-            else T.saliency(rankings, attributes, n_triangles, n_flipped)
+            for i in live
+        ]
+        scored = T.perturb_predict(
+            self.spark, perts, [pcs[i] for i in live], matcher, attr_length
         )
-        summary = tmpcache.track(T.cf_summary(explanation).repartition(1).cache())
-        cfs = T.counterfactuals(flipped, summary)
 
-        lattices: list = []
-        if debug:
-            # debug lattices (explain.py:79-153): regroup the prediction
-            # log per triangle driver-side; the reference's CSV round-trip
-            # (S3) is skipped — the log DataFrame is collected directly.
-            from certa_spark.lattice import lattices_from_predictions
+        out = [
+            Explanation(pd.DataFrame(), pd.Series(dtype=float), pd.DataFrame(), [])
+            for _ in supports
+        ]
+        for i, (flipped, rankings, predicted) in zip(live, scored):
+            # 5. rankings, saliency and summaries (explain.py:63-77)
+            n_triangles = len(tris[i])
+            pss = T.aggregate_rankings(rankings, n_triangles, attr_length)
+            sal = T.saliency(rankings, attributes, n_triangles, len(flipped))
+            summary = T.cf_summary(pss)
+            lattices: list = []
+            if debug:
+                # debug lattices (explain.py:79-153), regrouped from the
+                # prediction log; the reference's CSV round-trip is skipped
+                from certa_spark.lattice import lattices_from_predictions
 
-            lattices = lattices_from_predictions(
-                all_pred.collect(), attributes, float(scores["match_score"])
+                lattices = lattices_from_predictions(
+                    predicted.to_dict("records"), attributes, match_scores[i]
+                )
+            out[i] = Explanation(
+                saliency=pd.DataFrame([sal]),
+                pss=pd.Series(pss["pss"].to_numpy(), index=pss["attr_set"].to_numpy()),
+                counterfactuals=T.counterfactuals(flipped, summary),
+                triangles=list(
+                    zip(tris[i]["pivot"], tris[i]["anchor"], tris[i]["free"])
+                ),
+                cf_summary=pd.Series(
+                    summary["pss"].to_numpy(), index=summary["attr_set"].to_numpy()
+                ),
+                lattices=lattices,
+                saliency_dict=sal,
             )
-
-        # pss + summary ride ONE tagged-union collect (their branches
-        # are cached single-partition frames, so per-branch row order
-        # is the same the two separate toPandas calls produced)
-        both = (
-            explanation.select(F.lit(0).alias("_t"), "attr_set", "pss")
-            .unionByName(
-                summary.select(F.lit(1).alias("_t"), "attr_set", "pss")
-            )
-            .toPandas()
-        )
-        pss_pdf = both[both["_t"] == 0][["attr_set", "pss"]]
-        summary_pdf = both[both["_t"] == 1][["attr_set", "pss"]]
-        cf_pdf = (
-            cfs.withColumn(
-                "alteredAttributes", F.array_join("alteredAttributes", "/")
-            )
-            .withColumn("droppedValues", F.array_join("droppedValues", "/"))
-            .withColumn("copiedValues", F.array_join("copiedValues", "/"))
-            .toPandas()
-        )
-        return Explanation(
-            saliency=pd.DataFrame([sal]),
-            pss=pd.Series(
-                data=pss_pdf["pss"].values, index=pss_pdf["attr_set"].values
-            ),
-            counterfactuals=cf_pdf,
-            triangles=[(r["pivot"], r["anchor"], r["free"]) for r in tri_rows],
-            cf_summary=pd.Series(
-                data=summary_pdf["pss"].values, index=summary_pdf["attr_set"].values
-            ),
-            lattices=lattices,
-            saliency_dict=sal,
-            counterfactuals_df=cfs,
-            pss_df=explanation,
-        )
+        return out

@@ -8,6 +8,7 @@ reproduced bit-for-bit by the DuckDB correctness oracle. Spark's
 
     Spark : conv(substring(md5(s), 1, 8), 16, 10)  -> 32-bit int as long
     DuckDB: ('0x' || substr(md5(s), 1, 8))::BIGINT
+    Python: int(md5(s).hexdigest()[:8], 16)         (driver-side twin)
 
 Seeded variants prepend ``"<seed>:"`` to the input. 60-bit variant uses
 15 hex chars so the value always fits a signed 64-bit integer in both
@@ -15,6 +16,8 @@ engines.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -34,6 +37,13 @@ def _seeded(col: Column, seed: int | None) -> Column:
 def hash32(col: Column, seed: int | None = None) -> Column:
     """Deterministic 32-bit hash as a non-negative long."""
     return F.conv(F.substring(F.md5(_seeded(col, seed)), 1, 8), 16, 10).cast("long")
+
+
+def py_hash32(s: str, seed: int | None = None) -> int:
+    """Driver-side twin of :func:`hash32` for one string value."""
+    if seed is not None:
+        s = f"{seed}:{s}"
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
 
 
 def hash64(col: Column, seed: int | None = None) -> Column:

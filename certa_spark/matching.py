@@ -37,10 +37,12 @@ SCORE_COLS = ("nomatch_score", "match_score")
 class Matcher(Protocol):
     def predict(self, pairs: DataFrame) -> DataFrame: ...
 
-    # cheap=True lets the triangle engine fuse all perturbation depths
-    # into ONE predict round (it may evaluate perturbations the
-    # reference's early-exit would skip — free for JVM-side matchers,
-    # wasteful for real model inference).
+    # cheap=True lets the explain post-scan score every perturbation
+    # depth of every instance in ONE predict round (it may evaluate
+    # perturbations the reference's per-depth early exit would skip —
+    # free for JVM-side matchers); cheap=False gets one round per depth
+    # over the still-undecided instances, so the early exit saves
+    # real model inference.
     cheap: bool
 
 

@@ -6313,9 +6313,7 @@ def q_flagship_batch_saliency(spark, sf_dir) -> DataFrame:
         (dict(zip(left.columns, a)), dict(zip(right.columns, b)))
         for a, b in zip(lrows, rrows)
     ]
-    res = ex.explain_batch(
-        insts, NativeCosineMatcher(), num_triangles=10, parallelism=2
-    )
+    res = ex.explain_batch(insts, NativeCosineMatcher(), num_triangles=10)
     rows = [
         (i, attr, round(float(v), 6))
         for i, r in enumerate(res)

@@ -202,7 +202,7 @@ def test_explain_batch_matches_per_instance(spark, er_tables):
         (dict(zip(COLS, rows_a[1])), dict(zip(COLS, rows_b[1]))),
         (dict(zip(COLS, rows_a[2])), dict(zip(COLS, rows_b[40]))),  # likely non-match
     ]
-    batch = ex.explain_batch(insts, m, num_triangles=10, parallelism=3)
+    batch = ex.explain_batch(insts, m, num_triangles=10)
     for inst, got in zip(insts, batch):
         want = ex.explain(inst[0], inst[1], m, num_triangles=10)
         assert got.saliency_dict == want.saliency_dict
@@ -231,7 +231,7 @@ def test_explain_batch_chunked_parity(spark, er_tables):
         for i in range(9)
     ]
     batch = ex.explain_batch(
-        insts, m, num_triangles=10, parallelism=4, scan_batch_size=4
+        insts, m, num_triangles=10, scan_batch_size=4
     )
     assert len(batch) == 9
     for i in (0, 5, 8):  # first chunk, middle chunk, last partial chunk

@@ -8,7 +8,13 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from certa_spark.functions.hashing import duck_hash32, duck_hash64, hash32, hash64
+from certa_spark.functions.hashing import (
+    duck_hash32,
+    duck_hash64,
+    hash32,
+    hash64,
+    py_hash32,
+)
 from certa_spark.functions.text import bow_cosine, token_diff
 from certa_spark.functions import textstats as TS
 
@@ -63,8 +69,8 @@ def test_hash_cross_engine(spark):
         d32 = con.execute(f"SELECT {duck_hash32(repr(row['v']))}").fetchone()[0]
         d32s = con.execute(f"SELECT {duck_hash32(repr(row['v']), 7)}").fetchone()[0]
         d64 = con.execute(f"SELECT {duck_hash64(repr(row['v']))}").fetchone()[0]
-        assert row["h32"] == d32, v
-        assert row["h32s"] == d32s, v
+        assert row["h32"] == d32 == py_hash32(row["v"]), v
+        assert row["h32s"] == d32s == py_hash32(row["v"], 7), v
         assert row["h64"] == d64, v
 
 

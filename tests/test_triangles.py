@@ -1,13 +1,12 @@
 """Triangle engine golden tests vs a pandas oracle that re-derives the
 reference algorithm (certa/triangles_method.py) on tiny fixtures."""
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from certa_spark.operators import triangles as T
 
-
-def _support(spark, rows):
-    return spark.createDataFrame(rows, ["id", "label"])
+ATTRS = ["name", "description"]
 
 
 def _oracle_wedges(rows):
@@ -36,11 +35,13 @@ def test_mixed_triangles_matches_oracle(spark):
         ("0@5#1@13", 0),
         ("0@9#1@14", 0),
     ]
-    got = sorted(
+    spark_got = sorted(
         (r["pivot"], r["anchor"], r["free"], r["side"])
-        for r in T.mixed_triangles(_support(spark, rows)).collect()
+        for r in T.mixed_triangles(spark.createDataFrame(rows, ["id", "label"])).collect()
     )
-    assert got == _oracle_wedges(rows)
+    local = T.open_triangles(pd.DataFrame(rows, columns=["id", "label"]))
+    got = sorted(local[["pivot", "anchor", "free", "side"]].itertuples(index=False, name=None))
+    assert spark_got == got == _oracle_wedges(rows)
     # triangle invariant (FIXTURES.md §3.4): pivot-anchor from a match,
     # anchor-free from a non-match
     for pivot, anchor, free, side in got:
@@ -50,64 +51,69 @@ def test_mixed_triangles_matches_oracle(spark):
         else:
             assert (f"{anchor}#{pivot}", 1) in rows
             assert (f"{anchor}#{free}", 0) in rows
+    # each triangle points at the support rows it came from
+    for t in local.itertuples():
+        assert rows[t.pos][1] == 1 and rows[t.neg][1] == 0
 
 
-def _sources(spark):
-    ls = spark.createDataFrame(
-        [(1, "u name", "u desc"), (2, "w name", "w desc"), (5, "x", "y")],
-        ["id", "name", "description"],
+def _support(pairs, attrs=ATTRS):
+    """Collected support rows: (left record, right record, label)."""
+    return pd.DataFrame(
+        [
+            {
+                **{"ltable_" + a: v for a, v in zip(["id", *attrs], map(str, lrec))},
+                **{"rtable_" + a: v for a, v in zip(["id", *attrs], map(str, rrec))},
+                "id": f"0@{lrec[0]}#1@{rrec[0]}",
+                "label": label,
+            }
+            for lrec, rrec, label in pairs
+        ]
     )
-    rs = spark.createDataFrame(
-        [(10, "v name", "v desc"), (12, "q", "r")], ["id", "name", "description"]
+
+
+U, W = (1, "u name", "u desc"), (2, "w name", "w desc")
+V, Q = (10, "v name", "v desc"), (12, "q", "r")
+
+
+def _perturb(pairs, class_to_explain, depth, attrs=ATTRS):
+    support = _support(pairs, attrs)
+    tri = T.open_triangles(support)
+    out = T.perturbations(
+        support, tri, attrs, attrs, class_to_explain, depth + 1
     )
-    return ls, rs
+    return out[out["depth"] == depth].to_dict("records")
 
 
-def test_perturbations_class1_copy_semantics(spark):
+def test_perturbations_class1_copy_semantics():
     """class 1: perturbed record starts from pivot u, receives subset
     values from free w (triangles_method.py:84-94)."""
-    ls, rs = _sources(spark)
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
-    out = T.perturbations_at_depth(tri, ls, rs, 1, 1).collect()
+    out = _perturb([(U, V, 1), (W, V, 0)], 1, 1)
     by_attr = {tuple(r["alteredAttributes"]): r for r in out}
     assert set(by_attr) == {("ltable_name",), ("ltable_description",)}
     r = by_attr[("ltable_name",)]
     assert r["ltable_name"] == "w name"          # copied from free
     assert r["ltable_description"] == "u desc"   # untouched from pivot
     assert r["rtable_name"] == "v name"          # anchor side intact
-    assert r["droppedValues"] == ["u name"]
-    assert r["copiedValues"] == ["w name"]
+    assert list(r["droppedValues"]) == ["u name"]
+    assert list(r["copiedValues"]) == ["w name"]
     assert r["triangle"] == "0@1 1@10 0@2"
 
 
-def test_perturbations_class0_reversed(spark):
+def test_perturbations_class0_reversed():
     """class 0: perturbed record starts from free w, receives values
     from pivot u (triangles_method.py:96-105)."""
-    ls, rs = _sources(spark)
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
-    out = T.perturbations_at_depth(tri, ls, rs, 1, 0).collect()
+    out = _perturb([(U, V, 1), (W, V, 0)], 0, 1)
     by_attr = {tuple(r["alteredAttributes"]): r for r in out}
     r = by_attr[("ltable_name",)]
     assert r["ltable_name"] == "u name"          # copied from pivot
     assert r["ltable_description"] == "w desc"   # base is free record
-    assert r["droppedValues"] == ["w name"]
-    assert r["copiedValues"] == ["u name"]
+    assert list(r["droppedValues"]) == ["w name"]
+    assert list(r["copiedValues"]) == ["u name"]
 
 
-def test_perturbations_right_side_and_depth2(spark):
-    ls, rs = _sources(spark)
-    rs3 = spark.createDataFrame(
-        [(10, "v name", "v desc"), (12, "q", "r"), (13, "s", "t")],
-        ["id", "name", "description"],
-    )
-    tri = spark.createDataFrame(
-        [("1@10", "0@1", "1@12", "right")], ["pivot", "anchor", "free", "side"]
-    )
-    out = T.perturbations_at_depth(tri, ls, rs3, 2, 1).collect()
+def test_perturbations_right_side_and_depth2():
+    # right-side triangle <1@10, 0@1, 1@12>
+    out = _perturb([(U, V, 1), (U, Q, 0)], 1, 2)
     assert len(out) == 1  # C(2,2) = 1 subset of rtable attrs
     r = out[0]
     assert tuple(r["alteredAttributes"]) == ("rtable_name", "rtable_description")
@@ -115,22 +121,22 @@ def test_perturbations_right_side_and_depth2(spark):
     assert r["ltable_name"] == "u name"  # anchor (left) side intact
 
 
-def test_aggregate_and_summary(spark):
-    rankings = spark.createDataFrame(
+def test_aggregate_and_summary():
+    rankings = pd.DataFrame(
         [
-            (["a"], 3, 1),
-            (["b"], 0, 1),
-            (["a", "b"], 5, 2),
-            (["a", "c"], 5, 2),
+            (("a",), 3, 1),
+            (("b",), 0, 1),
+            (("a", "b"), 5, 2),
+            (("a", "c"), 5, 2),
         ],
-        "alteredAttributes array<string>, flips long, depth int",
+        columns=["alteredAttributes", "flips", "depth"],
     )
     expl = T.aggregate_rankings(rankings, n_triangles=10, attr_length=3)
-    vals = {r["attr_set"]: r["pss"] for r in expl.collect()}
+    vals = dict(zip(expl["attr_set"], expl["pss"]))
     assert vals == {"a": 0.3, "b": 0.0, "a/b": 0.5, "a/c": 0.5}
 
     summary = T.cf_summary(expl)
-    keys = {r["attr_set"] for r in summary.collect()}
+    keys = set(summary["attr_set"])
     assert keys == {"a/b", "a/c"}  # both at max 0.5, neither contains the other
 
     sal = T.saliency(rankings, ["a", "b", "c"], n_triangles=10, n_flipped=13)
@@ -140,55 +146,60 @@ def test_aggregate_and_summary(spark):
     assert abs(sal["c"] - (10 / flips + 5 / flips)) < 1e-12
 
 
-def test_cf_summary_minimality(spark):
-    expl = spark.createDataFrame(
+def test_cf_summary_minimality():
+    expl = pd.DataFrame(
         [
-            (["a"], "a", 0.5),
-            (["a", "b"], "a/b", 0.5),
-            (["c", "d"], "c/d", 0.5),
-            (["b"], "b", 0.2),
+            (("a",), "a", 0.5),
+            (("a", "b"), "a/b", 0.5),
+            (("c", "d"), "c/d", 0.5),
+            (("b",), "b", 0.2),
         ],
-        "alteredAttributes array<string>, attr_set string, pss double",
+        columns=["alteredAttributes", "attr_set", "pss"],
     )
-    keys = {r["attr_set"] for r in T.cf_summary(expl).collect()}
+    keys = set(T.cf_summary(expl)["attr_set"])
     # a/b strictly contains surviving a -> dropped; c/d survives
     assert keys == {"a", "c/d"}
+
+
+class AlwaysFlipMatcher:
+    """Scores every pair a non-match; counts its predict() rounds."""
+
+    def __init__(self, cheap):
+        self.cheap = cheap
+        self.calls = 0
+
+    def predict(self, pairs):
+        self.calls += 1
+        return pairs.withColumn("match_score", F.lit(0.0)).withColumn(
+            "nomatch_score", F.lit(1.0)
+        )
+
+
+ATTRS3 = ["name", "description", "price"]
+
+
+def _three_attr_perturbations():
+    pairs = [((1, "a", "b", "c"), (10, "p", "q", "r"), 1),
+             ((2, "d", "e", "f"), (10, "p", "q", "r"), 0)]
+    support = _support(pairs, ATTRS3)
+    tri = T.open_triangles(support)
+    return T.perturbations(support, tri, ATTRS3, ATTRS3, 1, attr_length=3)
 
 
 def test_monotonicity_early_exit(spark):
     """Once an entire depth flips, deeper depths synthesize flips
     without model calls (triangles_method.py:309-327)."""
-    from certa_spark.matching import Matcher
-
-    calls = []
-
-    class AlwaysFlipMatcher:
-        def predict(self, pairs):
-            calls.append(1)
-            return pairs.withColumn("match_score", F.lit(0.0)).withColumn(
-                "nomatch_score", F.lit(1.0)
-            )
-
-    ls = spark.createDataFrame(
-        [(1, "a", "b", "c"), (2, "d", "e", "f")],
-        ["id", "name", "description", "price"],
-    )
-    rs = spark.createDataFrame(
-        [(10, "p", "q", "r")], ["id", "name", "description", "price"]
-    )
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
-    flipped, rankings, all_pred = T.perturb_predict(
-        spark, tri, ls, rs, AlwaysFlipMatcher(), 1, attr_length=3
+    m = AlwaysFlipMatcher(cheap=False)
+    [(flipped, rankings, all_pred)] = T.perturb_predict(
+        spark, [_three_attr_perturbations()], [1], m, attr_length=3
     )
     # depth 1 flips everything -> depth 2 synthesized (1 model call only)
-    assert len(calls) == 1
+    assert m.calls == 1
     # flips recorded for both depths: C(3,1) + C(3,2) subsets
-    assert flipped.count() == 3 + 3
-    assert rankings.agg(F.sum("flips")).collect()[0][0] == 6
+    assert len(flipped) == 3 + 3
+    assert rankings["flips"].sum() == 6
     # prediction log only contains genuinely predicted rows
-    assert all_pred.count() == 3
+    assert len(all_pred) == 3
 
 
 def test_lens_interventions_and_degrees(spark):
@@ -303,55 +314,34 @@ def test_kernel_shap_efficiency_and_ranking(spark):
 
 
 def test_fused_depth_loop_equivalence(spark):
-    """fused=True must reproduce the loop's outputs exactly — including
-    the post-hoc early-exit reconstruction when a depth fully flips."""
+    """A cheap matcher (all depths in one scoring round) must reproduce
+    the per-depth loop's outputs exactly — including the post-hoc
+    early-exit reconstruction when a depth fully flips."""
+    pert = _three_attr_perturbations()
 
-    class AlwaysFlipMatcher:
-        cheap = True
-
-        def predict(self, pairs):
-            return pairs.withColumn("match_score", F.lit(0.0)).withColumn(
-                "nomatch_score", F.lit(1.0)
-            )
-
-    ls = spark.createDataFrame(
-        [(1, "a", "b", "c"), (2, "d", "e", "f")],
-        ["id", "name", "description", "price"],
-    )
-    rs = spark.createDataFrame(
-        [(10, "p", "q", "r")], ["id", "name", "description", "price"]
-    )
-    tri = spark.createDataFrame(
-        [("0@1", "1@10", "0@2", "left")], ["pivot", "anchor", "free", "side"]
-    )
-
-    def snapshot(fused):
-        f, r, a = T.perturb_predict(
-            spark, tri, ls, rs, AlwaysFlipMatcher(), 1, attr_length=3, fused=fused
-        )
+    def snapshot(matcher):
+        [(f, r, a)] = T.perturb_predict(spark, [pert], [1], matcher, attr_length=3)
         key = lambda df: sorted(
-            (tuple(row["alteredAttributes"]), row["depth"], row["match_score"])
-            for row in df.collect()
+            zip(df["alteredAttributes"], df["depth"], df["match_score"])
         )
-        rank = sorted(
-            (tuple(row["alteredAttributes"]), row["depth"], row["flips"])
-            for row in r.collect()
-        )
+        rank = sorted(r[["alteredAttributes", "depth", "flips"]].itertuples(index=False, name=None))
         return key(f), rank, key(a)
 
-    assert snapshot(fused=False) == snapshot(fused=True)
+    assert snapshot(AlwaysFlipMatcher(cheap=False)) == snapshot(
+        AlwaysFlipMatcher(cheap=True)
+    )
 
     # and with a non-flipping matcher (no early exit at all)
     from certa_spark.matching import NativeCosineMatcher
 
-    def snap2(fused):
-        f, r, a = T.perturb_predict(
-            spark, tri, ls, rs, NativeCosineMatcher(), 1, attr_length=3, fused=fused
-        )
-        return (
-            sorted(map(tuple, f.drop("match_score", "nomatch_score").collect())),
-            sorted(map(tuple, r.collect())),
-            sorted(map(tuple, a.drop("match_score", "nomatch_score").collect())),
-        )
+    class LoopCosine(NativeCosineMatcher):
+        cheap = False
 
-    assert snap2(False) == snap2(True)
+    def snap2(matcher):
+        [(f, r, a)] = T.perturb_predict(spark, [pert], [1], matcher, attr_length=3)
+        rows = lambda df: sorted(
+            map(tuple, df.drop(columns=["match_score", "nomatch_score"]).values.tolist())
+        )
+        return rows(f), sorted(map(tuple, r.values.tolist())), rows(a)
+
+    assert snap2(LoopCosine()) == snap2(NativeCosineMatcher())
